@@ -139,10 +139,6 @@ def main(argv=None) -> int:
     ap.add_argument("--max-restarts", type=int, default=-1)
     ap.add_argument("--rollup", action="store_true", help="also run the window rollup query")
     ap.add_argument(
-        "--no-quarantine-stream", action="store_true",
-        help="skip the admission-reject side stream (benchmarking only)",
-    )
-    ap.add_argument(
         "--batch-timeout-ms", type=int, default=None,
         help="flag batches slower than this in the progress feed (Hydra ingest-timeout analog)",
     )
@@ -174,15 +170,14 @@ def main(argv=None) -> int:
         rq, _ = pipeline.start_window_rollup(spark, args.audio, args.out, args.files_per_trigger)
         queries.append(rq)
 
-    if not args.no_quarantine_stream:
-        # dead-letter delivery: admission rejects leave the main stream
-        # pre-join (a ts-invalid row would be watermark-dropped there),
-        # so the stateless side stream MUST run alongside the flagship
-        # or RecordTooLarge/InvalidLogicalType rows are silently lost
-        qq, _ = pipeline.start_quarantine_stream(
-            spark, args.audio, args.out, args.files_per_trigger
-        )
-        queries.append(qq)
+    # dead-letter delivery: admission rejects leave the main stream
+    # pre-join (a ts-invalid row would be watermark-dropped there), so
+    # the stateless side stream MUST run alongside the flagship or
+    # RecordTooLarge/InvalidLogicalType rows are silently lost
+    qq, _ = pipeline.start_quarantine_stream(
+        spark, args.audio, args.out, args.files_per_trigger
+    )
+    queries.append(qq)
 
     tables, restarts = run_with_restarts(
         start_flagship, max_restarts=args.max_restarts, bounded=args.bounded

@@ -43,8 +43,6 @@ class ExactlyOnceSink:
         tables: dict,
         key_cols: list[str],
         ack: str = "replicated",
-        ts_col: str = "event_time",
-        has_lineage_cols: bool = True,
         strategy: str = "merge",
         lineage_partitions: int = 32,
         commit_offsets: bool = True,
@@ -54,8 +52,6 @@ class ExactlyOnceSink:
         self.tables = tables
         self.key_cols = key_cols
         self.ack = ack
-        self.ts_col = ts_col
-        self.has_lineage_cols = has_lineage_cols
         # merge = copy-on-write upsert (latest-wins, tombstones);
         # append_dedup = insert-only keyed append (streaming fast path,
         # commit cost stays flat as the table grows)
@@ -130,7 +126,6 @@ class ExactlyOnceSink:
         track_lineage = (
             self.ack == "replicated"
             and self.commit_offsets
-            and self.has_lineage_cols
             and "ingest_partition" in good.columns
         )
         lin_obs = None
@@ -149,7 +144,7 @@ class ExactlyOnceSink:
         # within-batch latest-wins on the sink key (caller may have
         # already deduped; this makes MERGE input key-unique).
         # hash-agg (max_by), not window sort — see latest_wins_hash
-        order_cols = [self.ts_col] + (
+        order_cols = ["event_time"] + (
             ["transcript_time"] if "transcript_time" in good.columns else []
         )
         deduped = latest_wins_hash(good, self.key_cols, order_cols)

@@ -1,9 +1,13 @@
 """write_streams_direct must be row-identical to write_clips +
-split_streams — the bench's large datasets are generated by the fused
-path (no joined intermediate on disk), so the scaling measurements rely
-on this equivalence."""
+split_streams. perfbench/gen.py builds the benchmark's streams the way
+the fused path does (seeded synth_metadata plus per-clip waveforms, no
+joined intermediate on disk; its replay_dirty layout is the one the
+fused path writes), so its clips stand for the engine's fixture clips
+through this equivalence."""
 
 import shutil
+
+import pytest
 
 from hydra_spark import synth
 
@@ -26,41 +30,38 @@ def test_direct_stream_generation_matches_two_step(spark):
     shutil.rmtree(ROOT, ignore_errors=True)
 
 
-def test_bench_size_disk_lifecycle(monkeypatch, tmp_path):
-    """At bench sizes ensure_dataset must (a) take the fused path — the
-    split path's waveform repartition spills the whole dataset to local
-    disk (round-5 ENOSPC post-mortem), (b) reclaim any cached joined
-    intermediate up front, and (c) preflight only the 1x output size."""
+def test_dataset_disk_preflight(monkeypatch, tmp_path):
+    """ensure_dataset refuses to start a write that would leave less than
+    its 5 GiB floor free, and a root with cached streams needs no disk."""
     import os
+    import shutil
+    from collections import namedtuple
 
     root = str(tmp_path)
-    n = synth.DROP_INTERMEDIATE_MIN_N  # smallest bench-class size
-
-    # a cached intermediate must not push the preflight to 2x
-    clips = os.path.join(root, f"clips_n{n}")
-    os.makedirs(clips)
-    open(os.path.join(clips, "_SUCCESS"), "w").close()
-    assert synth.dataset_bytes_needed(root, n) == n * synth.BYTES_PER_CLIP
+    n = 2000
+    # two-step footprint: the joined clips table plus the audio stream
+    need = 2 * n * synth.BYTES_PER_CLIP
+    assert synth.dataset_bytes_needed(root, n) == need
 
     calls = []
-    monkeypatch.setattr(
-        synth, "write_streams_direct",
-        lambda spark, a, t, n, seed, files: calls.append(("direct", a, t)),
-    )
-    monkeypatch.setattr(
-        synth, "split_streams",
-        lambda *a, **k: calls.append(("split",)),
-    )
-    monkeypatch.setattr(
-        synth, "write_clips",
-        lambda *a, **k: calls.append(("clips",)),
-    )
-    paths = synth.ensure_dataset(None, root, n=n)
-    assert [c[0] for c in calls] == ["direct"]
-    # the stale intermediate was reclaimed before generation started
-    assert not os.path.exists(clips)
-    assert paths["audio"].endswith(f"clips_audio_n{n}")
+    for name in ("write_clips", "split_streams"):
+        monkeypatch.setattr(synth, name, lambda *a, name=name, **k: calls.append(name))
+    usage = namedtuple("usage", "total used free")
+    free = need + 5 * 2**30 - 1
+    monkeypatch.setattr(shutil, "disk_usage", lambda path: usage(0, 0, free))
 
-    # small/test sizes keep the two-step path (pytest fixtures read the
-    # joined clips table directly) and preflight its 2x footprint
-    assert synth.dataset_bytes_needed(root, 2000) == 2 * 2000 * synth.BYTES_PER_CLIP
+    with pytest.raises(RuntimeError, match="5 GiB"):
+        synth.ensure_dataset(None, root, n=n)
+    assert calls == [] and os.listdir(root) == []
+
+    free += 1
+    synth.ensure_dataset(None, root, n=n)
+    assert calls == ["write_clips", "split_streams"]
+
+    tr = os.path.join(root, f"transcripts_n{n}")
+    os.makedirs(tr)
+    open(os.path.join(tr, "_SUCCESS"), "w").close()
+    assert synth.dataset_bytes_needed(root, n) == 0
+    free = 0
+    assert synth.ensure_dataset(None, root, n=n)["transcripts"] == tr
+    assert calls == ["write_clips", "split_streams"]

@@ -1,4 +1,4 @@
-"""Standalone flagship runner (used by the kill-and-resume test and bench).
+"""Standalone flagship runner (used by the kill-and-resume test).
 
 Runs the full streaming pipeline to completion (processAllAvailable) and
 exits. Restart-from-checkpoint is exercised by SIGKILLing this process

@@ -36,6 +36,8 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from hydra_spark.session import SQL_DEFAULTS
+
 
 class ProgressListener(StreamingQueryListener):
     """Appends one JSON line per micro-batch to <out>/_progress.jsonl.
@@ -64,6 +66,7 @@ class ProgressListener(StreamingQueryListener):
         )
         if timed_out:
             self.timeouts += 1
+        ops = p.stateOperators or []
         self._emit(
             {
                 "event": "progress",
@@ -74,7 +77,10 @@ class ProgressListener(StreamingQueryListener):
                 "batch_duration_ms": p.batchDuration,
                 "timed_out": timed_out,
                 "watermark": p.eventTime.get("watermark") if p.eventTime else None,
-                "state_rows": sum(s.numRowsTotal for s in p.stateOperators) if p.stateOperators else 0,
+                # row totals read 0 (trackTotalNumberOfRows=false); the
+                # store does report its instance count and commit time
+                "state_store_instances": sum(s.numStateStoreInstances for s in ops),
+                "state_commit_ms": sum(s.commitTimeMs for s in ops),
             }
         )
 
@@ -128,6 +134,20 @@ def run_with_restarts(
         time.sleep(min(2.0 ** min(restarts, 5), 30.0))
 
 
+def apply_sql_defaults(spark: SparkSession) -> None:
+    """Set every ``session.SQL_DEFAULTS`` entry the session has not set,
+    and shuffle partitions to the session's default parallelism (one
+    join state-store partition per core, as ``get_spark`` does)."""
+    defaults = {
+        **SQL_DEFAULTS,
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+    }
+    already = spark.conf.getAll
+    for k, v in defaults.items():
+        if k not in already:
+            spark.conf.set(k, v)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description="hydra_spark streaming engine runner")
     ap.add_argument("--audio", required=True, help="audio clips stream dir")
@@ -144,11 +164,12 @@ def main(argv=None) -> int:
     )
     args = ap.parse_args(argv)
 
-    # under spark-submit the session config (master, memory, shuffle
-    # partitions) comes from the submit command line; only engine-level
-    # defaults are set here, and only if unset.
+    # under spark-submit the session config (master, memory) comes from
+    # the submit command line; the engine's SQL defaults are set here,
+    # each only if that command line left it unset.
     spark = SparkSession.builder.appName("hydra_spark_runner").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    apply_sql_defaults(spark)
 
     from hydra_spark import pipeline
 

@@ -3,12 +3,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from hydra_spark.session import get_spark  # noqa: E402
 from hydra_spark import synth  # noqa: E402
 
-TEST_ROOT = "/root/repo/.data/tests"
+TEST_ROOT = os.path.join(REPO_ROOT, ".data", "tests")
 N = 2000
 
 

@@ -17,14 +17,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import flush_sentinels
+from tests.conftest import REPO_ROOT, TEST_ROOT, flush_sentinels
 
-RUNNER = ["/root/.pyenv/versions/3.11.7/bin/python", "/root/repo/tools/run_flagship.py"]
+RUNNER = [sys.executable, os.path.join(REPO_ROOT, "tools", "run_flagship.py")]
 
 
 def _prepare_streams(spark, dataset, tag):
-    aud = f"/root/repo/.data/tests/audio_{tag}"
-    trs = f"/root/repo/.data/tests/trs_{tag}"
+    aud = os.path.join(TEST_ROOT, f"audio_{tag}")
+    trs = os.path.join(TEST_ROOT, f"trs_{tag}")
     for src, dst in [(dataset["audio"], aud), (dataset["transcripts"], trs)]:
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
@@ -55,8 +55,8 @@ def _run(aud, trs, out, wait=True):
 @pytest.mark.slow
 def test_kill_and_resume_exactly_once(spark, dataset):
     aud, trs = _prepare_streams(spark, dataset, "kill")
-    out_victim = "/root/repo/.data/tests/out_victim"
-    out_clean = "/root/repo/.data/tests/out_clean"
+    out_victim = os.path.join(TEST_ROOT, "out_victim")
+    out_clean = os.path.join(TEST_ROOT, "out_clean")
     shutil.rmtree(out_victim, ignore_errors=True)
     shutil.rmtree(out_clean, ignore_errors=True)
 

@@ -15,7 +15,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from hydra_spark import pipeline
-from tests.conftest import flush_sentinels
+from tests.conftest import TEST_ROOT, flush_sentinels
 
 
 def _bad_rows(spark):
@@ -52,7 +52,7 @@ def _bad_rows(spark):
 
 
 def test_rejects_reach_quarantine_despite_watermark(spark, dataset):
-    root = "/root/repo/.data/tests/quar_stream"
+    root = os.path.join(TEST_ROOT, "quar_stream")
     aud = os.path.join(root, "audio")
     trs = os.path.join(root, "trs")
     out_root = os.path.join(root, "out")
@@ -93,7 +93,7 @@ def test_whole_batch_quarantined_executor_side(spark, dataset):
     """A bad codec can reject an entire batch — the quarantine write
     must stay executor-side (never a driver collect) and the run must
     stay exactly-once under that load."""
-    root = "/root/repo/.data/tests/quar_big"
+    root = os.path.join(TEST_ROOT, "quar_big")
     aud = os.path.join(root, "audio")
     trs = os.path.join(root, "trs")
     out_root = os.path.join(root, "out")

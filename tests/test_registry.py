@@ -8,7 +8,7 @@ import __spark_entry__ as E
 
 
 def _source_block():
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(E.__file__).read()
     start = src.index("def queries(")
     end = src.index("def oracle_sql(")
     return src[start:end]

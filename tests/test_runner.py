@@ -11,13 +11,11 @@ AtLeastOnceDelivery + our idempotent sink).
 import json
 import os
 import subprocess
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from hydra_spark.runner import ProgressListener, run_with_restarts  # noqa: E402
+from hydra_spark.runner import ProgressListener, run_with_restarts
+from tests.conftest import REPO_ROOT
 
 
 class FakeQuery:
@@ -82,7 +80,7 @@ def test_spark_submit_py_files(dataset, tmp_path):
             "bash", "tools/submit.sh", "local[4]",
             dataset["audio"], dataset["transcripts"], out, "--bounded",
         ],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         capture_output=True,
         text=True,
         timeout=420,
@@ -94,12 +92,22 @@ def test_spark_submit_py_files(dataset, tmp_path):
     # listener metrics feed written
     progress = [json.loads(l) for l in open(os.path.join(out, "_progress.jsonl"))]
     assert any(p["event"] == "progress" and p["num_input_rows"] > 0 for p in progress)
+    # runner.main applied the engine's SQL defaults: shuffle partitions
+    # = local[4]'s parallelism, one join state store per partition
+    stores = {p["state_store_instances"] for p in progress if p["event"] == "progress"}
+    assert stores - {0} == {4}
     # per-partition lineage rows written by the same commits
     assert os.path.isdir(os.path.join(out, "_lineage"))
 
 
 def test_progress_listener_batch_timeout_flag(tmp_path):
-    """R3 ingest-timeout analog: slow batches are flagged, never fatal."""
+    """R3 ingest-timeout analog: slow batches are flagged, never fatal.
+    The state-store fields come from what the store reports (instances,
+    commit time), summed over the query's stateful operators."""
+
+    class Op:  # state operator stub
+        numStateStoreInstances = 4
+        commitTimeMs = 21
 
     class P:  # minimal progress stub
         batchId = 1
@@ -108,13 +116,24 @@ def test_progress_listener_batch_timeout_flag(tmp_path):
         processedRowsPerSecond = 1.0
         batchDuration = 750
         eventTime = {}
+        stateOperators = [Op(), Op()]
+
+    class Stateless(P):
+        batchDuration = 100
         stateOperators = []
 
     class E:
-        progress = P()
+        def __init__(self, progress):
+            self.progress = progress
 
     lis = ProgressListener(str(tmp_path / "p" / "_progress.jsonl"), batch_timeout_ms=500)
-    lis.onQueryProgress(E())
-    line = json.loads(open(lis.path).read().splitlines()[0])
+    lis.onQueryProgress(E(P()))
+    lis.onQueryProgress(E(Stateless()))
+    line, stateless = [json.loads(l) for l in open(lis.path).read().splitlines()]
     assert line["timed_out"] is True
     assert lis.timeouts == 1
+    assert line["state_store_instances"] == 8
+    assert line["state_commit_ms"] == 42
+    assert "state_rows" not in line
+    assert stateless["timed_out"] is False
+    assert stateless["state_store_instances"] == 0 and stateless["state_commit_ms"] == 0

@@ -5,13 +5,15 @@ joined intermediate on disk; its replay_dirty layout is the one the
 fused path writes), so its clips stand for the engine's fixture clips
 through this equivalence."""
 
+import os
 import shutil
 
 import pytest
 
 from hydra_spark import synth
+from tests.conftest import TEST_ROOT
 
-ROOT = "/root/repo/.data/tests/synth_direct"
+ROOT = os.path.join(TEST_ROOT, "synth_direct")
 N = 3000
 
 

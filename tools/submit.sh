@@ -6,7 +6,9 @@
 #   tools/submit.sh local[8]  .data/bench/clips_audio_n60000 .data/bench/transcripts_n60000 /tmp/run8  --bounded
 #   tools/submit.sh local[32] ...                                                           /tmp/run32 --bounded
 # On a real cluster, swap the master for yarn/k8s and size executors
-# N vs 4N; nothing else changes.
+# N vs 4N; nothing else changes. The engine's SQL defaults (shuffle
+# partitions = default parallelism included) come from runner.py, which
+# sets each one this command line leaves unset; add a --conf to override.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -15,8 +17,6 @@ MASTER="$1"; AUDIO="$2"; TRS="$3"; OUT="$4"; shift 4
 ZIP=/tmp/hydra_spark_pkg.zip
 rm -f "$ZIP"
 zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
-
-CORES=$(echo "$MASTER" | grep -oE '[0-9]+' | head -1 || echo 32)
 
 # allocator tunables for the Python decode workers (see
 # hydra_spark/session.py:_set_allocator_env) — exported for local mode,
@@ -31,12 +31,6 @@ exec spark-submit \
   --conf spark.executorEnv.MALLOC_TOP_PAD_=67108864 \
   --conf spark.executorEnv.MALLOC_ARENA_MAX=2 \
   --py-files "$ZIP" \
-  --conf spark.sql.shuffle.partitions="${CORES}" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.session.timeZone=UTC \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.execution.arrow.maxRecordsPerBatch=1024 \
-  --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
   --conf spark.driver.memory=32g \
   --conf spark.ui.enabled=false \
   hydra_spark/runner.py \

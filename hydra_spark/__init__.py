@@ -10,3 +10,10 @@ metrics. See SURVEY.md for the full reference mapping.
 """
 
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle an engine UDF;
+# from then on their per-task importlib.invalidate_caches() stops
+# re-reading pyspark.zip's directory (see hydra_spark/zipcache.py).
+from hydra_spark import zipcache as _zipcache  # noqa: E402
+
+_zipcache.install()

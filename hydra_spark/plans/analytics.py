@@ -17,11 +17,18 @@ Determinism rules for oracle parity (value-hash comparison):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from hydra_spark import lineage as lin
 from hydra_spark.operators import windows as win
 from hydra_spark.sources.replay import seek_predicate
+
+# work tables of the registry rows that build their own tables
+ENTRY_DATA_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".data", "entry"
+)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -808,7 +815,7 @@ def kleene_stream_scan(spark, sf_dir):
     import shutil as _shutil
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"kleene_{tag}")
+    root = _os.path.join(ENTRY_DATA_ROOT, f"kleene_{tag}")
     _shutil.rmtree(root, ignore_errors=True)
     src = _os.path.join(root, "src")
     ev = _kleene_events(spark, sf_dir)
@@ -884,7 +891,7 @@ def kleene_unordered_scan(spark, sf_dir):
     from hydra_spark.operators.reorder import reorder_events
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"kleene_unord_{tag}")
+    root = _os.path.join(ENTRY_DATA_ROOT, f"kleene_unord_{tag}")
     _shutil.rmtree(root, ignore_errors=True)
     src = _os.path.join(root, "src")
     _os.makedirs(src)
@@ -978,7 +985,7 @@ def dpp_partitioned_scan(spark, sf_dir):
     import os as _os
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"dpp_{tag}")
+    root = _os.path.join(ENTRY_DATA_ROOT, f"dpp_{tag}")
     fact_dir = _os.path.join(root, "events_by_type")
     dim_dir = _os.path.join(root, "type_dim")
     src_mtime = str(
@@ -1227,7 +1234,7 @@ def schema_evolution(spark, sf_dir):
 
     from hydra_spark.tables import TransactionalTable
 
-    root = _os.path.join("/root/repo/.data/entry", f"schema_evo_{_os.path.basename(sf_dir.rstrip('/'))}")
+    root = _os.path.join(ENTRY_DATA_ROOT, f"schema_evo_{_os.path.basename(sf_dir.rstrip('/'))}")
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
     v1 = t.register_schema(
@@ -1272,7 +1279,7 @@ def table_time_travel(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"time_travel_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"time_travel_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
@@ -1319,7 +1326,7 @@ def _changes_fixture(spark, sf_dir, name):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
@@ -1365,7 +1372,7 @@ def table_skipping_scan(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"skip_scan_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"skip_scan_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -1530,7 +1537,7 @@ def table_zorder_scan(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"zorder_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"zorder_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=1)
@@ -2263,7 +2270,7 @@ def table_delete_where(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"del_where_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"del_where_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -2315,7 +2322,7 @@ def table_update_where(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"upd_where_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"upd_where_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -2369,7 +2376,7 @@ def table_rebucket(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"rebucket_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA_ROOT, f"rebucket_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=4)

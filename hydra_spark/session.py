@@ -68,6 +68,13 @@ SQL_DEFAULTS = {
 }
 
 
+# driver heap of get_spark and tools/submit.sh. It is a cap, not a
+# reservation. Half of a 15.7 GiB host's RAM (8035m) measured worse on
+# both benchmark workloads (cpu_ms_per_clip +10-17%, 4 seeds each):
+# G1's region size follows the cap, 32 MB at 48g and 4 MB at 8035m.
+DRIVER_MEMORY = "48g"
+
+
 def _set_allocator_env() -> None:
     """glibc malloc tunables, exported BEFORE the JVM starts so the
     pyspark daemon and every forked worker inherit them.
@@ -96,7 +103,7 @@ def get_spark(
     cores: int | None = None,
     app_name: str = "hydra_spark",
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str = DRIVER_MEMORY,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _set_allocator_env()

@@ -36,7 +36,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 
 @contextlib.contextmanager
@@ -1473,7 +1473,11 @@ class TransactionalTable:
                 old_files = {int(k): v for k, v in m["files"].items()}
                 read_files = [p for b in affected for p in old_files.get(b, [])]
                 if read_files:
-                    existing_keys = spark.read.parquet(*read_files).select(*self.key_cols)
+                    # key types come from the batch (validate_key_fields
+                    # pins the key columns): a given schema skips the
+                    # 1-task schema-inference job a bare read runs
+                    key_schema = T.StructType([batch.schema[k] for k in self.key_cols])
+                    existing_keys = spark.read.schema(key_schema).parquet(*read_files)
                     batch = batch.join(existing_keys, on=self.key_cols, how="left_anti")
 
             commit_id = uuid.uuid4().hex[:12]

@@ -77,3 +77,43 @@ def test_commit_offsets_toggle(spark, tmp_path, clips):
         assert t["output"].read(spark).count() == 200
         assert not t["metrics"].is_empty()
         assert t["lineage"].is_empty() is (not flag)
+
+
+def test_append_dedup_existing_keys_read_launches_no_job(spark, tmp_path, monkeypatch):
+    """The existing-keys probe reads with the batch's key schema, so the
+    read itself runs no schema-inference job (a bare spark.read.parquet
+    runs one per call, i.e. one per streaming batch)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    t = TransactionalTable(str(tmp_path / "t"), ["k", "ts"], n_buckets=4)
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").cast("string").alias("k"),
+            F.timestamp_seconds("id").alias("ts"),
+            F.col("id").alias("v"),
+        )
+
+    assert t.append_dedup(spark, batch(0, 100), 0)
+    sc, group = spark.sparkContext, "append_dedup_jobs"
+    jobs = lambda: len(sc.statusTracker().getJobIdsForGroup(group))  # noqa: E731
+    read_jobs = []
+    parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **kw):
+        before = jobs()
+        df = parquet(self, *paths, **kw)
+        read_jobs.append(jobs() - before)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    sc.setJobGroup(group, "append_dedup on a non-empty table")
+    try:
+        assert t.append_dedup(spark, batch(50, 150), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert read_jobs == [0]
+    # the bucket probe and the anti-join write; nothing at read time
+    assert 0 < jobs() <= 6
+    got = t.read(spark)
+    assert got.count() == 150 and got.select("k", "ts").distinct().count() == 150

@@ -24,6 +24,9 @@ zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
 export MALLOC_MMAP_THRESHOLD_=1073741824 MALLOC_TRIM_THRESHOLD_=1073741824
 export MALLOC_TOP_PAD_=67108864 MALLOC_ARENA_MAX=2
 
+# the driver heap cap get_spark uses
+DRIVER_MEMORY="$(python3 -c 'from hydra_spark.session import DRIVER_MEMORY; print(DRIVER_MEMORY)')"
+
 exec spark-submit \
   --master "$MASTER" \
   --conf spark.executorEnv.MALLOC_MMAP_THRESHOLD_=1073741824 \
@@ -31,7 +34,7 @@ exec spark-submit \
   --conf spark.executorEnv.MALLOC_TOP_PAD_=67108864 \
   --conf spark.executorEnv.MALLOC_ARENA_MAX=2 \
   --py-files "$ZIP" \
-  --conf spark.driver.memory=32g \
+  --conf spark.driver.memory="$DRIVER_MEMORY" \
   --conf spark.ui.enabled=false \
   hydra_spark/runner.py \
   --audio "$AUDIO" --transcripts "$TRS" --out "$OUT" "$@"
